@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: assert the physical-plan properties the engine's scale story
   * depends on (SURVEY §4). Prints PLAN OK/FAIL per check plus the formatted
-  * plans for eyeballing. `runMain graft.PlanCheck [sfDir]`. */
+  * plans for eyeballing, and exits 1 when any pin fails.
+  * `runMain graft.PlanCheck [sfDir]`. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = core.Sessions.local("8", appName = "graft-plancheck")
+    val spark = core.Sessions.local(appName = "graft-plancheck")
 
     def plan(name: String): String = {
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -24,11 +25,17 @@ object PlanCheck {
       }
       spark.stop(); return
     }
+    // every pin reports here; a failed pin prints its plan head and
+    // fails the run
+    var pins, failures = 0
+    def report(name: String, what: String, plan: String)(ok: Boolean): Unit = {
+      pins += 1
+      println(s"PLAN ${if (ok) "OK  " else "FAIL"} $name: $what")
+      if (!ok) { failures += 1; println(plan.linesIterator.take(40).mkString("\n")) }
+    }
     def check(name: String, what: String)(p: String => Boolean): Unit = {
       val s = plan(name)
-      val ok = p(s)
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} $name: $what")
-      if (!ok) println(s.linesIterator.take(40).mkString("\n"))
+      report(name, what, s)(p(s))
     }
 
     check("q01_scan_filter", "filter pushed to parquet scan")(
@@ -103,9 +110,8 @@ object PlanCheck {
               if f.relation.location.rootPaths.exists(_.toString.contains("lineitem")) => f
         }
       }.flatten
-      val ok = bad.isEmpty
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} q39_revenue_topk: lineitem is NEVER the broadcast build side")
-      if (!ok) println(plan39.toString.linesIterator.take(40).mkString("\n"))
+      report("q39_revenue_topk", "lineitem is NEVER the broadcast build side",
+        plan39.toString)(bad.isEmpty)
     }
     check("q50_lateral", "lateral decorrelated: no per-row subquery, no cartesian")(p =>
       !p.contains("CartesianProduct"))
@@ -138,9 +144,8 @@ object PlanCheck {
       val s = ext.Dedup.nearDupPairsFromSketch(
         ext.Dedup.sketch(docs, "doc_id", "text"))
         .queryExecution.executedPlan.toString
-      val ok = !s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin")
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} x2_minhash_neardup: LSH banding = equi-joins only, no crossJoin")
-      if (!ok) println(s.linesIterator.take(40).mkString("\n"))
+      report("x2_minhash_neardup", "LSH banding = equi-joins only, no crossJoin", s)(
+        !s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"))
     }
 
     check("x36_line_dedup", "heavy-line probe broadcast; row-local rebuild (no text collect_list, no cartesian)")(p =>
@@ -175,10 +180,9 @@ object PlanCheck {
       // its own and would leave this plan un-finalized); 500 rows
       df.collect()
       val p = df.queryExecution.executedPlan.toString
-      val ok = p.contains("ReusedExchange")
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} x43_ngram_lm: " +
-        "RUNTIME vocab scalar reuses the bigram-count exchange (ReusedExchange)")
-      if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+      report("x43_ngram_lm",
+        "RUNTIME vocab scalar reuses the bigram-count exchange (ReusedExchange)", p)(
+        p.contains("ReusedExchange"))
     }
     check("x44_jaro_winkler", "JW scoring through the native codegen expression (no UDF), no cartesian")(p =>
       p.contains("jaro_winkler_sim") && !p.contains("CartesianProduct") &&
@@ -264,10 +268,8 @@ object PlanCheck {
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("c"), sum(col("l_quantity")).as("s"))
           .queryExecution.executedPlan.toString
-        val ok1 = plain.contains(s"$root/mv") && !plain.contains("lineitem")
-        println(s"PLAN ${if (ok1) "OK  " else "FAIL"} x91_rollup_plain: " +
-          "aggregate scans the rollup, not the fact table")
-        if (!ok1) println(plain.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_plain", "aggregate scans the rollup, not the fact table",
+          plain)(plain.contains(s"$root/mv") && !plain.contains("lineitem"))
         graft.etl.MaterializedRollup.createAndRegister(
           spark, "plancheck_mv2", s"$sfDir/orders.parquet", s"$root/mv2",
           keys = Seq("o_custkey"), measures = Seq("o_totalprice"),
@@ -279,11 +281,9 @@ object PlanCheck {
           .groupBy(col("c_mktsegment"))
           .agg(sum(col("o_totalprice")).as("s"))
           .queryExecution.executedPlan.toString
-        val ok2 = star.contains(s"$root/mv2") && !star.contains("orders") &&
-          star.contains("customer")
-        println(s"PLAN ${if (ok2) "OK  " else "FAIL"} x91_rollup_star: " +
-          "join aggregate collapses the fact side, keeps the dim scan")
-        if (!ok2) println(star.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_star", "join aggregate collapses the fact side, keeps the dim scan",
+          star)(star.contains(s"$root/mv2") && !star.contains("orders") &&
+          star.contains("customer"))
         // grouping-sets collapse: PreAggExpandRewrite turns the CUBE into
         // merge ∘ Expand ∘ partial-agg, whose inner aggregate this rule
         // reroutes — the fact scan must disappear under the Expand too
@@ -291,11 +291,9 @@ object PlanCheck {
           .cube(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("c"), sum(col("l_quantity")).as("s"))
           .queryExecution.executedPlan.toString
-        val ok3 = cube.contains(s"$root/mv") && !cube.contains("lineitem") &&
-          cube.contains("Expand")
-        println(s"PLAN ${if (ok3) "OK  " else "FAIL"} x91_rollup_cube: " +
-          "grouping-sets aggregate collapses to the rollup under Expand")
-        if (!ok3) println(cube.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_cube", "grouping-sets aggregate collapses to the rollup under Expand",
+          cube)(cube.contains(s"$root/mv") && !cube.contains("lineitem") &&
+          cube.contains("Expand"))
       } finally {
         graft.plans.RollupViewRewrite.unregister("plancheck_mv")
         graft.plans.RollupViewRewrite.unregister("plancheck_mv2")
@@ -323,10 +321,8 @@ object PlanCheck {
         val scanLine = plan.linesIterator
           .find(l => l.contains("lists") && l.contains("FileScan"))
           .getOrElse("")
-        val ok = scanLine.contains("dynamicpruningexpression(list_id")
-        println(s"PLAN ${if (ok) "OK  " else "FAIL"} x94_ann_lists_dpp: " +
-          "lists scan partition-prunes on the probed list ids")
-        if (!ok) println(plan.linesIterator.take(40).mkString("\n"))
+        report("x94_ann_lists_dpp", "lists scan partition-prunes on the probed list ids",
+          plan)(scanLine.contains("dynamicpruningexpression(list_id"))
       } finally {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       }
@@ -354,11 +350,8 @@ object PlanCheck {
         val scanLine = plan.linesIterator
           .find(l => l.contains("lists") && l.contains("FileScan"))
           .getOrElse("")
-        val ok = scanLine.contains("PushedFilters: [") &&
-          scanLine.contains("EqualTo(grp,7)")
-        println(s"PLAN ${if (ok) "OK  " else "FAIL"} x97_filtered_pushdown: " +
-          "attribute predicate pushed into the lists parquet scan")
-        if (!ok) println(plan.linesIterator.take(40).mkString("\n"))
+        report("x97_filtered_pushdown", "attribute predicate pushed into the lists parquet scan",
+          plan)(scanLine.contains("PushedFilters: [") && scanLine.contains("EqualTo(grp,7)"))
       } finally {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       }
@@ -369,6 +362,8 @@ object PlanCheck {
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
+    println(s"PLAN $pins pins, $failures failed")
     spark.stop()
+    if (failures > 0) sys.exit(1)
   }
 }

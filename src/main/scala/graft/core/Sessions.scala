@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   *   dominates and both knobs are inert — they only govern the small end.
   */
 object Sessions {
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString),
       appName: String = "graft"): SparkSession = {
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off"
     val s = SparkSession.builder()

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,43 +65,45 @@ object JobRunner {
     *   `upload.py:16-25` keys every object under a fresh `<ts>/` root). */
   def run(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
       objectStoreCommit: Option[Boolean] = None): Result = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(spec.srcRoot).getFileSystem(conf)
-
     // -- 1. Partition-pruned input selection (S1/P1): only the requested
     //    upgrade=/state= dirs are ever listed, mirroring prefix construction
-    //    in fetch.py:60-83.
-    val partDirs = spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
-      .filter(p => fs.exists(new Path(p)))
+    //    in fetch.py:60-83. The scan reads the DIRECTORIES, not the listed
+    //    files: past 32 paths (the parallel-discovery threshold) a file
+    //    list would add a listing job of its own.
+    val (dirs, listedUris) = listInput(spark, spec)
+    process(spark, spec, outputRoot, runId, objectStoreCommit, listedUris, read = dirs)
+  }
 
-    // Metadata bypass (S4) runs regardless of whether data partitions
-    // exist — the reference appends metadata keys to the partition list
-    // unconditionally (fetch.py:60-81), so a metadata-only job still
-    // copies. Output is per-job (same isolation argument as jobDir: the
-    // reference keys every copy by its full original source key, and two
-    // releases share state_label metadata FILENAMES).
+  /** The pipeline body [[run]] and [[runIncremental]] share: scan `read`,
+    * aggregate, write, bypass-copy metadata, and account for `listedUris`
+    * (the files this run is responsible for) in the ledger and manifest.
+    * Empty `read` = nothing to process: the metadata copy still runs and
+    * the ledger reports zeros (reference: the run succeeds with listed=0 —
+    * README.md:345-361). */
+  private def process(spark: SparkSession, spec: JobSpec, outputRoot: String,
+      runId: String, objectStoreCommit: Option[Boolean], listedUris: Seq[String],
+      read: Seq[String]): Result = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dataOut = s"$outputRoot/$runId/data/${jobDir(spec)}"
+    // Metadata bypass (S4): raw byte copy, never decoded
+    // (fetch.py:143-149,161-196). Runs whether or not data exists — the
+    // reference appends metadata keys to the partition list unconditionally
+    // (fetch.py:60-81), so a metadata-only job still copies. Output is
+    // per-job (same isolation argument as jobDir: the reference keys every
+    // copy by its full original source key, and two releases share
+    // state_label metadata FILENAMES).
     val metadataOut = s"$outputRoot/$runId/metadata/${jobDir(spec)}"
-    def copyMetadata(): Long = {
-      val metaKeys = spec.upgrades.flatMap(u =>
-        PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state))
-      MetadataBypass.copyAll(conf, metaKeys, metadataOut)
-    }
-
-    if (partDirs.isEmpty) {
-      // nothing listed for this job (reference: the ledger reports zeros and
-      // the run succeeds — README.md:345-361 counts start at listed=0)
-      val bypassed = copyMetadata()
-      return Result(
-        s"$outputRoot/$runId/data/${jobDir(spec)}", metadataOut,
-        graft.ledger.Ledger.Report(0, 0, bypassed, 0, 0, Nil))
-    }
+    def copyMetadata(): Long = MetadataBypass.copyAll(conf,
+      spec.upgrades.flatMap(u => PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state)),
+      metadataOut)
+    if (read.isEmpty)
+      return Result(dataOut, metadataOut, Ledger.Report(0, 0, copyMetadata(), 0, 0, Nil))
 
     // FULL URIs (scheme intact) — anything that re-opens these files (the
     // footer-drift pass) must resolve them on the SOURCE filesystem, not
     // the default one. The ledger compares in scheme-stripped form (see
-    // step 6) because _metadata.file_path and listings render schemes
+    // step 5) because _metadata.file_path and listings render schemes
     // differently.
-    val listedUris: Seq[String] = listParquet(fs, partDirs)
     val listedFiles: Seq[String] = listedUris.map(u => new Path(u).toUri.getPath)
 
     // -- 2. Scan (S2/S3). ignoreCorruptFiles reproduces the reference's
@@ -110,21 +112,25 @@ object JobRunner {
     //    With a declared schema (S2 enforcement) the scan reads THAT schema:
     //    files missing a declared column yield nulls, extra columns are
     //    ignored, and the output schema is pinned regardless of which
-    //    footer a crawler-style merge would have picked.
+    //    footer a crawler-style merge would have picked. Without one the
+    //    schema is the footer MERGE (the reference's crawler behavior):
+    //    inference from a single footer touches only the first file, and a
+    //    corrupt first file would then abort the job as UNABLE_TO_INFER_SCHEMA.
     //    The observation carries BOTH the row count and the distinct set of
     //    contributing file paths (collect_set over _metadata.file_path), so
     //    the ledger needs no second scan of the input — one FileScan per
     //    job. Path count is file-count-bounded: the driver already holds
     //    the full listing, so the metric adds no new driver-memory class.
-    //    Observation name is unique per run: concurrent jobs in
+    //    Observation names carry one per-run id: concurrent jobs in
     //    runAllParallel each get their own listener match.
-    val obs = new Observation(s"etl_input_${java.util.UUID.randomUUID()}")
+    val obsId = java.util.UUID.randomUUID()
+    val obs = new Observation(s"etl_input_$obsId")
     val reader0 = spark.read
       .option("basePath", spec.srcRoot)
       .option("ignoreCorruptFiles", "true")
-    val reader = spec.declaredSchema.fold(reader0)(reader0.schema)
+    val reader = spec.declaredSchema.fold(reader0.option("mergeSchema", "true"))(reader0.schema)
     val input: DataFrame = reader
-      .parquet(partDirs: _*)
+      .parquet(read: _*)
       .withColumn("__src_file", col("_metadata.file_path"))
       .observe(obs,
         count(lit(1)).as("rows"),
@@ -157,8 +163,7 @@ object JobRunner {
     //    it) and write-once-per-runId is the contract — see the scaladoc
     //    on [[run]].
     val objectStore = objectStoreCommit.getOrElse(isObjectStore(outputRoot, conf))
-    val dataOut = s"$outputRoot/$runId/data/${jobDir(spec)}"
-    val outObs = new Observation("etl_output")
+    val outObs = new Observation(s"etl_output_$obsId")
     val writer0 = aggregated
       .observe(outObs, count(lit(1)).as("rows"))
       .write.mode("overwrite")
@@ -170,11 +175,9 @@ object JobRunner {
       .partitionBy("upgrade", "state")
       .parquet(dataOut)
 
-    // -- 5. Metadata bypass (S4): raw byte copy, never decoded
-    //    (fetch.py:143-149,161-196).
     val bypassed = copyMetadata()
 
-    // -- 6. Ledger (M3): listed vs processed set-diff + counters. Processed
+    // -- 5. Ledger (M3): listed vs processed set-diff + counters. Processed
     //    paths come from the main pass's observation (no second scan).
     //    _metadata.file_path is the full URI (file:/…, s3a://bucket/…)
     //    while the listing uses toUri.getPath (scheme+authority stripped) —
@@ -186,30 +189,28 @@ object JobRunner {
     }
     val missing = listedFiles.filterNot(processed.contains).sorted
 
-    // -- 7. Schema enforcement report (S2): footer-only diff vs the
+    // -- 6. Schema enforcement report (S2): footer-only diff vs the
     //    declared columns, distributed; empty when no schema is declared.
     val drift = spec.declaredSchema match {
       case Some(schema) => SchemaEnforce.detect(spark, listedUris, schema)
       case None => Nil
     }
 
-    val report = Ledger.Report(
-      listed = listedFiles.size,
-      processed = listedFiles.size - missing.size,
-      bypassed = bypassed,
-      inputRows = obs.get("rows").asInstanceOf[Long],
-      outputRows = outObs.get("rows").asInstanceOf[Long],
-      discrepancies = missing,
-      schemaDrift = drift)
-
-    // -- 8. Manifest: the run's processed source files, persisted so later
+    // -- 7. Manifest: the run's processed source files, persisted so later
     //    runs can subtract them (the ledger driving SCHEDULING, not just
     //    reporting — see runIncremental). Driver-side write; file-count
     //    sized, same memory class as the listing itself.
     writeManifest(conf, manifestPath(outputRoot, runId, spec),
       listedFiles.filterNot(missing.contains))
 
-    Result(dataOut, metadataOut, report)
+    Result(dataOut, metadataOut, Ledger.Report(
+      listed = listedFiles.size,
+      processed = listedFiles.size - missing.size,
+      bypassed = bypassed,
+      inputRows = obs.get("rows").asInstanceOf[Long],
+      outputRows = outObs.get("rows").asInstanceOf[Long],
+      discrepancies = missing,
+      schemaDrift = drift))
   }
 
   private def manifestPath(outputRoot: String, runId: String, spec: JobSpec): Path =
@@ -227,9 +228,13 @@ object JobRunner {
     finally out.close()
   }
 
-  /** Recursive .parquet listing of the given dirs (full URIs). */
-  private def listParquet(fs: FileSystem, dirs: Seq[String]): Seq[String] =
-    dirs.flatMap { dir =>
+  /** The requested upgrade=/state= dirs that exist, and the recursive
+    * .parquet listing under them (full URIs). */
+  private def listInput(spark: SparkSession, spec: JobSpec): (Seq[String], Seq[String]) = {
+    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
+      .filter(p => fs.exists(new Path(p)))
+    dirs -> dirs.flatMap { dir =>
       val it = fs.listFiles(new Path(dir), true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
       while (it.hasNext) {
@@ -238,6 +243,7 @@ object JobRunner {
       }
       buf
     }
+  }
 
   /** _metadata.file_path renders full URIs while listings use
     * toUri.getPath — normalize to the scheme-stripped form. */
@@ -284,74 +290,10 @@ object JobRunner {
     * keyed by run — the reference re-copies per run too). */
   def runIncremental(spark: SparkSession, spec: JobSpec, outputRoot: String,
       runId: String, objectStoreCommit: Option[Boolean] = None): Result = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(spec.srcRoot).getFileSystem(conf)
-    val partDirs = spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
-      .filter(p => fs.exists(new Path(p)))
-    val listedUris: Seq[String] = listParquet(fs, partDirs)
     val prior = processedSoFar(spark, outputRoot, spec)
-    val newUris = listedUris.filterNot(u => prior.contains(new Path(u).toUri.getPath))
-    val metadataOut = s"$outputRoot/$runId/metadata/${jobDir(spec)}"
-    val bypassed = {
-      val metaKeys = spec.upgrades.flatMap(u =>
-        PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state))
-      MetadataBypass.copyAll(conf, metaKeys, metadataOut)
-    }
-    val dataOut = s"$outputRoot/$runId/data/${jobDir(spec)}"
-    if (newUris.isEmpty)
-      return Result(dataOut, metadataOut,
-        Ledger.Report(0, 0, bypassed, 0, 0, Nil))
-
-    val newFiles = newUris.map(u => new Path(u).toUri.getPath)
-    val obs = new Observation(s"etl_incr_${java.util.UUID.randomUUID()}")
-    val reader0 = spark.read
-      .option("basePath", spec.srcRoot)
-      .option("ignoreCorruptFiles", "true")
-    val reader = spec.declaredSchema.fold(reader0)(reader0.schema)
-    val input = reader.parquet(newUris: _*)
-      .withColumn("__src_file", col("_metadata.file_path"))
-      .observe(obs,
-        count(lit(1)).as("rows"),
-        collect_set(col("__src_file")).as("paths"))
-      .drop("__src_file")
-    val keyCols = Set("timestamp", "bldg_id", "upgrade", "state")
-    val measures = input.schema.fields
-      .filter(f => f.dataType == org.apache.spark.sql.types.DoubleType &&
-        !keyCols.contains(f.name))
-      .map(_.name).toSeq
-    val aggregated = HourlyAggregate(
-      input, measureCols = measures, byId = spec.byId,
-      extraKeys = Seq("upgrade", "state"))
-    val objectStore = objectStoreCommit.getOrElse(isObjectStore(outputRoot, conf))
-    val outObs = new Observation(s"etl_incr_out_${java.util.UUID.randomUUID()}")
-    val writer0 = aggregated
-      .observe(outObs, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-    val writer =
-      if (objectStore) writer0
-      else writer0.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("upgrade", "state").parquet(dataOut)
-
-    val processed: Set[String] = obs.get("paths") match {
-      case s: Seq[_] => s.map(p => stripScheme(p.toString)).toSet
-      case other => sys.error(s"unexpected observation payload: $other")
-    }
-    val missing = newFiles.filterNot(processed.contains).sorted
-    val drift = spec.declaredSchema match {
-      case Some(schema) => SchemaEnforce.detect(spark, newUris, schema)
-      case None => Nil
-    }
-    writeManifest(conf, manifestPath(outputRoot, runId, spec),
-      newFiles.filterNot(missing.contains))
-    Result(dataOut, metadataOut, Ledger.Report(
-      listed = newFiles.size,
-      processed = newFiles.size - missing.size,
-      bypassed = bypassed,
-      inputRows = obs.get("rows").asInstanceOf[Long],
-      outputRows = outObs.get("rows").asInstanceOf[Long],
-      discrepancies = missing,
-      schemaDrift = drift))
+    val newUris = listInput(spark, spec)._2
+      .filterNot(u => prior.contains(new Path(u).toUri.getPath))
+    process(spark, spec, outputRoot, runId, objectStoreCommit, newUris, read = newUris)
   }
 
   /** Run every job in a config (reference `main.py:64-108` fan-out; jobs are

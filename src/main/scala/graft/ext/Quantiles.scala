@@ -61,7 +61,8 @@ object Quantiles {
     *   combined, so it stays metadata-sized while pass-2 savings scale
     *   with the corpus. The optimum moved UP from 14 once the prefilter
     *   became exact bucket MEMBERSHIP rather than a [min,max] span
-    *   (round 12, Q51Probe2 at the 100× set: a span straddling p25..p90
+    *   (round 12, tools/Q51Probe2.scala @ 6a3c675 at the 100× set: a span
+    *   straddling p25..p90
     *   admitted most of the corpus into the broadcast probe — 6.2 s;
     *   isin + 14 bits 4.4 s; isin + 18 bits 2.4 s).
     *   Near-unique continuous columns are what make pass 1 sensitive —
@@ -101,7 +102,8 @@ object Quantiles {
     // before its two pass-1 consumers — the rank-span branch and the
     // distinct-group branch of the union below. The r16 comment claimed
     // AQE stage reuse made the input "scanned exactly once here"; measured
-    // (R17Probe `q51` at the 10× set) pass 1 ran TWO full melt scans —
+    // (`q51` mode of tools/R17Probe.scala @ 6a3c675 at the 10× set) pass 1
+    // ran TWO full melt scans —
     // column pruning drops `__bc` from the distinct-group branch's partial
     // aggregate and the rank branch's isnotnull(__b) pushes below the
     // exchange, either of which breaks plan canonicalization and with it
@@ -161,7 +163,8 @@ object Quantiles {
       org.apache.spark.sql.types.StructField("__n", org.apache.spark.sql.types.LongType)))
     import scala.jdk.CollectionConverters._
     val neededLocal = spark.createDataFrame(neededRows.toSeq.asJava, neededSchema)
-    // EXACT bucket membership, not a [min,max] span (round 12, Q51Probe2):
+    // EXACT bucket membership, not a [min,max] span (round 12,
+    // tools/Q51Probe2.scala @ 6a3c675):
     // the needed buckets are ≤ 2·|specs| discrete values per tag, but the
     // quantile points straddle the distribution (p25..p90), so a span
     // prefilter admits most of the corpus into the broadcast probe —

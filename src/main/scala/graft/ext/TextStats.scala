@@ -33,7 +33,7 @@ object TextStats {
     * letCol-bound (r16): HOF lambdas re-evaluate every referenced
     * subtree per invocation, so an unbound `toks` re-ran the regex split
     * once per window position — O(tokens) tokenizations per row
-    * (measured 10× on the screens stage, R16Probe). */
+    * (measured 10× on the screens stage, tools/R16Probe.scala @ 6a3c675). */
   def wordNgrams(text: Column, n: Int): Column = {
     require(n >= 1, "n-gram order must be >= 1")
     import graft.functions.ColumnOps.letCol

@@ -305,7 +305,8 @@ object Queries {
     * carry the same information (the X1 content-dedup rule). Collision
     * odds are n²/2⁶⁵ — ~10⁻¹⁰ at 100 M distinct docs — the standard trade
     * content-dedup already makes. Measured 0.90 → 0.53 s at the 100× set
-    * (KernelProbe, r15); DuckDB's oracle counts the raw text and values
+    * (tools/KernelProbe.scala @ 6a3c675, r15); DuckDB's oracle counts the raw
+    * text and values
     * agree absent a collision. The `when(isNotNull, …)` guard preserves
     * SQL NULL semantics: Spark's xxhash64(NULL) returns the SEED (a
     * non-null constant), so without it a NULL text would count as one
@@ -782,7 +783,8 @@ object Queries {
   val q54_exists_subquery: Q = (s, d) => {
     t(s, d, "customer").createOrReplaceTempView("q54_customer")
     t(s, d, "orders").createOrReplaceTempView("q54_orders")
-    // SHUFFLE_HASH inside EACH subquery block (round 11, Q54Probe2: SMJ
+    // SHUFFLE_HASH inside EACH subquery block (round 11,
+    // tools/Q54Probe2.scala @ 6a3c675: SMJ
     // 2.3–3.5 s → SHJ 1.9–2.4 s at sf10): the planner's default
     // SortMergeJoin pays two full sorts of the 6M-row orders relation;
     // the semi/anti joins need no order and the per-partition hash

@@ -400,4 +400,28 @@ class JobRunnerSpec extends SparkSpec {
     assert(spark.read.parquet(res.dataOut).count() === 1)
     assert(res.ledger.bypassed === 0) // metadata dir absent → nothing copied
   }
+
+  test("corrupt file that sorts FIRST, no declared schema: footer merge skips it") {
+    // single-footer inference touches only the first file; a corrupt first
+    // file must not abort the job as UNABLE_TO_INFER_SCHEMA
+    val root = Files.createTempDirectory("graft_etl_badfirst").toString
+    val src = s"$root/src"
+    Seq((ts("2024-03-01 00:00:00"), 1L, 1.0, 0, "AK"),
+      (ts("2024-03-01 00:15:00"), 1L, 3.0, 0, "AK"))
+      .toDF("timestamp", "bldg_id", "m", "upgrade", "state")
+      .write.partitionBy("upgrade", "state").parquet(src)
+    val bad = java.nio.file.Paths.get(s"$src/upgrade=0/state=AK/0-corrupt.parquet")
+    Files.write(bad, Array[Byte](1, 2, 3, 4, 5))
+
+    val spec = JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa")
+    assert(spec.declaredSchema.isEmpty)
+    val res = JobRunner.run(spark, spec, s"$root/out", "run1")
+
+    assert(res.ledger.discrepancies.size === 1)
+    assert(res.ledger.discrepancies.head.endsWith("0-corrupt.parquet"))
+    assert(res.ledger.processed === res.ledger.listed - 1)
+    assert(res.ledger.inputRows === 2)
+    assert(spark.read.parquet(res.dataOut).count() === 1)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
 }

@@ -10,7 +10,8 @@ import graft.ext.AudioDedup._
   * resampling (the same continuous signal rendered at 8 kHz / 11.025 kHz
   * / 16 kHz) and gain change, seed separation, banding exactness, and
   * the checksum-verified oracle face. Probe-calibrated margins (1-second
-  * tone-mixture corpus, 30 seeds, tools/AudioProbe): resampled variants
+  * tone-mixture corpus, 30 seeds, tools/AudioProbe.scala @ 6a3c675):
+  * resampled variants
   * ≤ 13 bits, gain-halved ≤ 1, inter-seed minimum 19 — the default
   * radius 14 sits inside the gap. */
 class AudioDedupSpec extends SparkSpec {

@@ -10,7 +10,8 @@ import graft.ext.VideoDedup._
   * invariance under REAL frame-rate doubling / per-frame JPEG re-encode /
   * half-resolution re-render / brightness gain, seed separation, banding
   * exactness, and the checksum-verified oracle face. Probe-calibrated
-  * margins (2-second clips, 30 seeds, tools/VideoProbe): fps-doubled ≤ 7
+  * margins (2-second clips, 30 seeds,
+  * tools/VideoProbe.scala @ 6a3c675): fps-doubled ≤ 7
   * bits, JPEG ≤ 1, half-res ≤ 5, gain ≤ 1; inter-seed minimum 10 — the
   * default radius 8 sits inside the gap. */
 class VideoDedupSpec extends SparkSpec {
